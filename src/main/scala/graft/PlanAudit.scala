@@ -438,17 +438,17 @@ object PlanAudit {
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
         "SortMergeJoin", "BroadcastHashJoin"),
       maxShuffleExchanges = Some(2)),
-    // q78: Lloyd training — each iteration's assignment is a
-    // zero-shuffle projection (centroids ride as literals) and the
-    // (cell, dim) aggregation collects k·dim rows to the driver, so
-    // the FINAL frame only re-derives the last assignment + means
+    // q78: Lloyd training runs entirely before the final frame —
+    // each iteration is ONE shuffle-free job (the assignment projection
+    // with centroids as literals, per-partition decimal sum buffers
+    // merged on the driver), so the frame is the driver-assembled
+    // (cell, d) centroid matrix as a local relation
     Check("q78_kmeans_train_oracle",
       mustContain = Seq(),
       mustNotContain = Seq("CartesianProduct", "BroadcastNestedLoopJoin",
         "SortMergeJoin"),
-      // [CEILING] 1: the Lloyd contract — the final frame re-derives
-      // ONE (cell, dim) means aggregation; per-iteration assignments
-      // are zero-shuffle projections (centroids ride as literals)
+      // [CEILING] 1: the Lloyd contract — nothing in the frame but the
+      // presentation sort of the k·dim centroid rows may shuffle
       maxShuffleExchanges = Some(1)),
     // q83: perceptual image dHash near-dup — frames reduce to one
     // long per media in the map (nothing pixel-shaped shuffles), the

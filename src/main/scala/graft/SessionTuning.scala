@@ -23,8 +23,9 @@ package graft
   *    ADVICE r15); 100 TB → ~1.6M. Cores only CAP the small regime —
   *    at cluster scale the byte-derived term dominates, so nothing
   *    here is tuned to local[32]. A dir resolving to zero bytes falls
-  *    back to the core count (never 1) with a warning; sizes resolve
-  *    through Hadoop FileSystem so remote URIs work.
+  *    back to the core count (never 1) with a warning naming the
+  *    cause; sizes resolve through the Hadoop FileSystem of the
+  *    path's scheme (only local paths are exercised by the tests).
   *    Override: SPARK_GRAFT_SHUFFLE_PARTITIONS.
   *
   * 2. CODEGEN CACHE SIZED TO THE ENGINE (spark.sql.codegen.cache
@@ -49,16 +50,22 @@ object SessionTuning {
   private val ShuffleExpansion = 4L
 
   /** Recursive byte size of the inputs under `dir`, resolved through
-    * the Hadoop FileSystem for the path's own scheme — a remote URI
-    * (hdfs://, s3a://) sizes correctly instead of silently reading 0
+    * the Hadoop FileSystem for the path's own scheme, so a remote URI
+    * (hdfs://, s3a://) is sized by its own filesystem where that
+    * connector is on the classpath, instead of silently reading 0
     * through a java.io walk (ADVICE r15). Returns 0 when the path is
     * missing or unreadable; the caller treats that loudly. */
-  def inputBytes(dir: String): Long =
+  def inputBytes(dir: String): Long = sizeOrCause(dir).getOrElse(0L)
+
+  /** [[inputBytes]] with the reason a size could not be read: Left
+    * carries the non-fatal failure (fatal errors propagate), a
+    * missing path is Right(0). */
+  private def sizeOrCause(dir: String): Either[Throwable, Long] =
     try {
       val path = new org.apache.hadoop.fs.Path(dir)
       val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-      if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
-    } catch { case _: Throwable => 0L }
+      Right(if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L)
+    } catch { case scala.util.control.NonFatal(e) => Left(e) }
 
   /** Input-derived initial shuffle partition count (rule above). A
     * dir that resolves to zero bytes (missing, empty, unreadable)
@@ -66,10 +73,13 @@ object SessionTuning {
     * would serialize every shuffle of a misconfigured runner
     * (ADVICE r15 medium). */
   def shufflePartitions(dir: String, cpus: Int): Int = {
-    val bytes = inputBytes(dir)
+    val sized = sizeOrCause(dir)
+    val bytes = sized.getOrElse(0L)
     if (bytes <= 0L) {
+      val cause = sized.fold(e => s"could not size it: $e",
+        _ => "missing or empty")
       System.err.println(s"[graft] SessionTuning: no readable input bytes" +
-        s" under $dir — falling back to $cpus shuffle partitions")
+        s" under $dir ($cause) — falling back to $cpus shuffle partitions")
       math.max(1, cpus)
     } else {
       val target = math.max(1L, (bytes + SmallTarget - 1) / SmallTarget)

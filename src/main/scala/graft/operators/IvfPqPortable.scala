@@ -115,27 +115,14 @@ object IvfPqPortable {
   private def trainAndEncode(withRes: DataFrame, centsLit: Column,
       m: Int, ksub: Int, subIters: Int, dsub: Int,
       trainRes: DataFrame = null): DataFrame = {
-    val resForTraining = Option(trainRes).getOrElse(withRes)
-    // NOTE (round 15, measured): running these m independent Lloyd
-    // chains concurrently (guide §2.6 thread-pool overlap) makes the
-    // gate SLOWER at local[32] — 12.4 s vs 8.0 s on q93 — because the
-    // concurrent first touch of the shared cached residual relation
-    // races (each thread computes all partitions) and 4 × 32-task
-    // jobs oversubscribe the box. Sequential is the right shape here.
-    val codebooks = (0 until m).map { j =>
-      KMeansPortable.trainModel(
-        resForTraining.select(col("id"),
-          slice(col("rvec"), j * dsub + 1, dsub).as("svec")),
-        ksub, subIters, "id", "svec").centroids
-    }.toArray
+    val codebooks = trainCodebooks(Option(trainRes).getOrElse(withRes),
+      m, ksub, subIters, dsub).map(_.centroids)
 
     // ---- encode + reconstruct: ONE zero-shuffle projection — each
     // code is the Lloyd assignment of the residual slice, the
     // reconstruction re-adds the cell centroid
-    val codeCols = (0 until m).map { j =>
-      val sl = slice(col("rvec"), j * dsub + 1, dsub)
-      KMeansPortable.cellExpr(sl,
-        RhpExpressions.decimalScaledDot(sl, sl), codebooks(j))
+    val codeCols = subspaces(m, dsub).zip(codebooks).map {
+      case ((sl, n2), cb) => KMeansPortable.cellExpr(sl, n2, cb)
     }
     val cwCols = (0 until m).map { j =>
       element_at(typedLit(codebooks(j).map(_.toSeq).toSeq),
@@ -145,6 +132,31 @@ object IvfPqPortable {
       zip_with(element_at(centsLit, col("cell") + 1),
         concat(cwCols: _*), (c, w) => c + w).as("recon"))
   }
+
+  /** The m residual slices as (slice, decimal self-dot) column pairs
+    * over `rvec` — the ONE definition codebook training and PQ
+    * encoding both assign through. */
+  private def subspaces(m: Int, dsub: Int): Seq[(Column, Column)] =
+    (0 until m).map { j =>
+      val sl = slice(col("rvec"), j * dsub + 1, dsub)
+      (sl, RhpExpressions.decimalScaledDot(sl, sl))
+    }
+
+  /** The m subspace codebooks over (id, rvec) residuals: m
+    * independent flat Lloyd fits, one per `dsub`-wide slice, trained
+    * in ONE keyed loop ([[KMeansPortable.trainKeyedFromBase]]) — each
+    * fit's result is exactly [[KMeansPortable.trainModel]] over its
+    * slice (spec-pinned), but the m fits share one seed collect and
+    * one assignment projection + one shuffle-free mean job per
+    * iteration instead of m of each. The fixed per-job cost, not the
+    * kernel, dominated the m sequential fits; running them on a
+    * thread pool instead measured SLOWER (round 15: 12.4 s vs 8.0 s
+    * on q93 at local[32] — racing first touches of the shared cached
+    * residuals and oversubscribed tasks). */
+  private[graft] def trainCodebooks(res: DataFrame, m: Int, ksub: Int,
+      subIters: Int, dsub: Int): Array[KMeansPortable.Model] =
+    KMeansPortable.trainKeyedFromBase(res, subspaces(m, dsub), ksub,
+      subIters)
 
   /** The per-RUNG half of [[encodeAndScore]]: ADC against the probed
     * cells, shortlist, exact decimal rerank, final top-k. */
@@ -244,14 +256,12 @@ object IvfPqPortable {
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
     // trains FROM the checked cached base (one shaping, one cache —
-    // the flat topK discipline at the two-level site)
-    val tl = KMeansPortable.trainTwoLevelFromBase(
+    // the flat topK discipline at the two-level site) and routes once:
+    // training's cached routed relation feeds corpus assignment,
+    // anchor filtering and the probe
+    val (tl, routed) = KMeansPortable.trainTwoLevelRouted(
       base, nlist, coarseIters, supers)
     val childLit = typedLit(tl.children.map(_.toSeq).toSeq)
-    // route once (cached): corpus assignment, anchor filtering and
-    // the probe all read the routed relation
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers)))
     val withRes = graft.CacheScope.track(
       KMeansPortable.assignChildren(routed, tl.children, tl.groups)
         .withColumn("rvec", zip_with(col("vec"),
@@ -528,11 +538,9 @@ object IvfPqPortable {
     val (base, dim) = checkedBase(vectors, idCol, vecCol)
     require(dim % m == 0, s"m=$m must divide dim=$dim")
     val dsub = dim / m
-    val tl = KMeansPortable.trainTwoLevelFromBase(
+    val (tl, routed) = KMeansPortable.trainTwoLevelRouted(
       base, nlist, coarseIters, supers)
     val childLit = typedLit(tl.children.map(_.toSeq).toSeq)
-    val routed = graft.CacheScope.track(base.withColumn("super",
-      KMeansPortable.cellExpr(col("vec"), col("n2"), tl.supers)))
     val withRes = graft.CacheScope.track(
       KMeansPortable.assignChildren(routed, tl.children, tl.groups)
         .withColumn("rvec", zip_with(col("vec"),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{RhpExpressions, RhpKernels}
-import org.apache.spark.sql.types.DecimalType
 
 /** ENGINE-PORTABLE Lloyd k-means — the oracle twin of the coarse
   * quantizer training that [[Dedup.semanticDedup]] (q54) and the IVF
@@ -29,13 +28,16 @@ import org.apache.spark.sql.types.DecimalType
   *   - a FIXED iteration count (no convergence test — a float
   *     tolerance would re-introduce engine-specific behavior).
   *
-  * Scale shape — exactly Spark ML's own Lloyd loop: the (k × dim)
-  * centroid matrix broadcasts to executors as literals; assignment is
-  * a zero-shuffle projection; the update is one map-side-combining
-  * aggregation per iteration whose result (≤ k·dim rows) is collected
-  * to the driver to become the next broadcast. Nothing vector-shaped
-  * shuffles; the per-iteration driver exchange is k·dim scalars — the
-  * irreducible state of Lloyd's algorithm, identical at 100 TB.
+  * Scale shape — Spark ML's own Lloyd loop: the (k × dim) centroid
+  * matrix broadcasts to executors as literals; assignment is a
+  * zero-shuffle projection; the update is ONE shuffle-free job per
+  * iteration — per-partition decimal sum buffers, merged and finished
+  * on the driver ([[VectorAgg.collectDecimalVecMeans]]) into the next
+  * broadcast. Independent fits over slices of one relation (the m PQ
+  * codebooks) share that loop, keyed (fit j, cell) —
+  * [[trainKeyedFromBase]]. Nothing shuffles; the per-iteration driver
+  * state is k·dim scalars per fit — the irreducible state of Lloyd's
+  * algorithm — and each task returns at most its own cells' buffers.
   *
   * Output: one row per (cell, dimension) of the FINAL centroid
   * matrix — (cell, d, c, n_members), n_members from the last
@@ -190,10 +192,6 @@ object KMeansPortable {
         "pair-work cost is intended.")
   }
 
-  /** Run `iters` Lloyd iterations from the first-k-ids init and
-    * return the final centroid matrix + last-assignment member
-    * counts. Driver-side state is the k×dim matrix only.
-    */
   /** The (id, vec, n2) shaping every trainer and assignment
     * consumes — factored so composed operators (IvfPqPortable) can
     * train from the SAME cached base they assign/encode from instead
@@ -207,6 +205,9 @@ object KMeansPortable {
       .withColumn("n2",
         RhpExpressions.decimalScaledDot(col("vec"), col("vec"))))
 
+  /** Run `iters` Lloyd iterations from the first-k-ids init and
+    * return the final centroid matrix + last-assignment member
+    * counts. Driver-side state is the k×dim matrix only. */
   def trainModel(vectors: DataFrame, k: Int, iters: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): Model =
     trainModelFromBase(shapedBase(vectors, idCol, vecCol), k, iters)
@@ -214,40 +215,52 @@ object KMeansPortable {
   /** [[trainModel]] over an already-shaped cached (id, vec, n2)
     * base — same values, zero re-shaping. */
   private[graft] def trainModelFromBase(base: DataFrame, k: Int,
-      iters: Int): Model = {
+      iters: Int): Model =
+    trainKeyedFromBase(base, Seq(col("vec") -> col("n2")), k, iters).head
+
+  /** m INDEPENDENT [[trainModel]] fits in one Lloyd loop: fit j runs
+    * over the (vector, decimal self-dot) column pair `vecs(j)` of the
+    * same `base` (the m PQ subspace slices of one residual relation),
+    * and returns exactly what [[trainModel]] over those columns
+    * alone would. Shared work: one seed collect — the k lowest-id
+    * rows, sliced m ways (every fit's seeds are the same ids) — and
+    * per iteration ONE projection assigning all m cells through
+    * [[cellExpr]], then ONE shuffle-free mean job keyed j·k + cell.
+    * Driver state: m·k·dim(j) scalars. */
+  private[graft] def trainKeyedFromBase(base: DataFrame,
+      vecs: Seq[(Column, Column)], k: Int, iters: Int): Array[Model] = {
     require(k > 0 && iters >= 1, s"need k>0, iters>=1; got k=$k iters=$iters")
-    // committed init: the k lowest-id vectors in id order. A bounded
+    require(vecs.nonEmpty, "need at least one vector column")
+    val m = vecs.length
+    // committed init: the k lowest-id rows in id order. A bounded
     // k-row collect (the seed matrix IS driver state under Lloyd).
-    val seeds = base.orderBy(col("id")).select(col("vec")).limit(k)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(seeds.length == k,
-      s"k=$k seeds requested but input has only ${seeds.length} vectors")
-    var cents = seeds
-    var counts = Array.fill[Long](k)(0L)
+    val seedRows = base.orderBy(col("id")).select(vecs.map(_._1): _*)
+      .limit(k).collect()
+    require(seedRows.length == k,
+      s"k=$k seeds requested but input has only ${seedRows.length} vectors")
+    var cents = Array.tabulate(m, k)((j, c) =>
+      seedRows(c).getSeq[Double](j).toArray)
+    var counts = Array.fill(m, k)(0L)
     var it = 0
     while (it < iters) {
-      val assigned = assignCells(base, cents)
-      // per-(cell, dim) decimal mean; ≤ k·dim rows — the broadcast
-      // state for the next iteration, collected as Lloyd requires
-      val means = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
-            .cast("double") / count(lit(1))).as("c"),
-          count(lit(1)).as("n"))
-        .collect()
+      val keyed = base.select(explode(array(vecs.indices.map { j =>
+          val (v, n2) = vecs(j)
+          struct((cellExpr(v, n2, cents(j)) + j * k).as("cell"), v.as("vec"))
+        }: _*)).as("kv"))
+        .select(col("kv.cell"), col("kv.vec"))
+      // an emptied cell emits no key and keeps its previous centroid
       val next = cents.map(_.clone())
-      val nextCounts = Array.fill[Long](k)(0L)
-      means.foreach { r =>
-        val cell = r.getInt(0)
-        next(cell)(r.getInt(1)) = r.getDouble(2)
-        nextCounts(cell) = r.getLong(3)
+      val nextCounts = Array.fill(m, k)(0L)
+      VectorAgg.collectDecimalVecMeans(keyed).foreach {
+        case (key, VectorAgg.CellMean(mean, n)) =>
+          next(key / k)(key % k) = mean
+          nextCounts(key / k)(key % k) = n
       }
       cents = next
       counts = nextCounts
       it += 1
     }
-    Model(cents, counts)
+    Array.tabulate(m)(j => Model(cents(j), counts(j)))
   }
 
   /** [[trainModel]] rendered relationally: one row per (cell, d) of
@@ -426,7 +439,15 @@ object KMeansPortable {
   /** [[trainTwoLevel]] over an already-shaped cached (id, vec, n2)
     * base — same values, zero re-shaping (the IvfPqPortable share). */
   private[graft] def trainTwoLevelFromBase(base: DataFrame, nlist: Int,
-      iters: Int, supers: Int = 0): TwoLevelModel = {
+      iters: Int, supers: Int = 0): TwoLevelModel =
+    trainTwoLevelRouted(base, nlist, iters, supers)._1
+
+  /** [[trainTwoLevelFromBase]] that also hands back its cached
+    * `routed` relation (base + `super`, the trained super argmin) —
+    * callers that go on to assign and probe the same corpus read it
+    * instead of routing the corpus a second time. */
+  private[graft] def trainTwoLevelRouted(base: DataFrame, nlist: Int,
+      iters: Int, supers: Int = 0): (TwoLevelModel, DataFrame) = {
     require(nlist > 0 && iters >= 1,
       s"need nlist>0, iters>=1; got nlist=$nlist iters=$iters")
     require(supers >= 0, s"supers must be >= 0 (0 = auto ⌈√nlist⌉)")
@@ -475,19 +496,15 @@ object KMeansPortable {
     val groupsArr = groups.map(_.toArray)
     var it = 0
     while (it < iters) {
-      val assigned = assignChildren(routed, cents, groupsArr)
-      val means = assigned
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
-            .cast("double") / count(lit(1))).as("c"))
-        .collect()
-      val next = cents.map(_.clone())
-      means.foreach(r => next(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+      // one shuffle-free mean job; an emptied cell keeps its centroid
+      val next = cents.clone()
+      VectorAgg.collectDecimalVecMeans(
+          assignChildren(routed, cents, groupsArr))
+        .foreach { case (cell, cm) => next(cell) = cm.mean }
       cents = next
       it += 1
     }
-    TwoLevelModel(superModel.centroids, cents, groupsArr)
+    (TwoLevelModel(superModel.centroids, cents, groupsArr), routed)
   }
 
   /** Two-level training with the CHILD LEVEL AS A RELATION under the
@@ -551,9 +568,10 @@ object KMeansPortable {
     while (it < iters) {
       val assigned = assignChildrenRelational(routed, childRel)
       // the shared decimal-parity buffer mean (round 15): bit-equal
-      // to the posexplode (cell, d) decimal aggregate — the q104
-      // oracle re-derives the SAME values — at the bounded-buffer
-      // cost (VectorAgg.decimalVecMeans, measured 14× at dim 1024)
+      // to the (cell, d) decimal aggregate — the q104 oracle
+      // re-derives the SAME values — at the bounded-buffer cost
+      // (VectorAgg.decimalVecMeans, measured 14× at dim 1024); keyed
+      // and shuffled, since the child level never reaches the driver
       val means = VectorAgg.decimalVecMeans(assigned)
       val prev = childRel
       // left join + coalesce: an emptied cell keeps its previous
@@ -813,14 +831,6 @@ object KMeansPortable {
        |    JOIN cn$sfx c ON c.j = d.j) WHERE rn = 1),
        |""".stripMargin
 
-  /** The shared CTE chain: `v` (vectors), `dims`, `norms`, seeds and
-    * `iters` Lloyd rounds ending in `cd<iters>` (j, d, c — the final
-    * centroid matrix) and `mm<iters>` (the last mean update), with a
-    * TRAILING comma so callers append their own CTEs. Consumed by
-    * [[oracleSql]] (q78) and composed with the SemDeDup application
-    * CTEs by the q80 end-to-end oracle. No WITH keyword — the caller
-    * owns it (q80 needs WITH RECURSIVE for its closure).
-    */
   /** The DuckDB re-derivation of [[trainTwoLevel]] +
     * [[assignCellsTwoLevel]] as a generated CTE chain (q90): super
     * Lloyd (composing [[lloydCtes]] at S = ⌈√nlist⌉), the routing
@@ -1063,6 +1073,14 @@ object KMeansPortable {
        |""".stripMargin
   }
 
+  /** The shared CTE chain: `v` (vectors), `dims`, `norms`, seeds and
+    * `iters` Lloyd rounds ending in `cd<iters>` (j, d, c — the final
+    * centroid matrix) and `mm<iters>` (the last mean update), with a
+    * TRAILING comma so callers append their own CTEs. Consumed by
+    * [[oracleSql]] (q78) and composed with the SemDeDup application
+    * CTEs by the q80 end-to-end oracle. No WITH keyword — the caller
+    * owns it (q80 needs WITH RECURSIVE for its closure).
+    */
   def lloydCtes(table: String, idCol: String, vecCol: String,
       k: Int, iters: Int, prefix: String = ""): String = {
     val p = prefix

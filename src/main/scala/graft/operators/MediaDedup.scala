@@ -194,9 +194,6 @@ object MediaDedup {
     def expectedOccupancy: Double = n.toDouble / (1L << spec.bandBits)
     /** Expected random candidate pairs per band ~ n²/2^bandBits. */
     def candidateStreamPerBand: Double = n.toDouble * expectedOccupancy
-    /** All bands' candidate streams: bands · n²/2^bandBits. */
-    def candidateStreamTotal: Double =
-      spec.bands * candidateStreamPerBand
   }
 
   /** ITU-R BT.601 integer luma (the JPEG convention), exact: no

@@ -135,11 +135,6 @@ object SimilaritySearch {
     /** The SWEEP cost of the chosen point — the corpus fraction the
       * candidate join reads per anchor (the dominant cost knob). */
     def sweptFraction(nlist: Int): Double = nprobe.toDouble / nlist
-    /** The candidate-RANKING cost share — the fraction of supers
-      * whose children the probe ranks (p broadcast joins over the
-      * ≤ nlist-row centroid relation). */
-    def rankedSuperShare(supers: Int): Double =
-      probeSupers.toDouble / supers
   }
 
   /** One evaluated rung of a FULL-CHAIN (coarse probe + ADC shortlist
@@ -159,11 +154,6 @@ object SimilaritySearch {
       rerank: Int, recall: Double, floorMet: Boolean,
       walk: Seq[PqRecallRung]) {
     def sweptFraction(nlist: Int): Double = nprobe.toDouble / nlist
-    def rankedSuperShare(supers: Int): Double =
-      probeSupers.toDouble / supers
-    /** Exact re-scores per anchor at the chosen point — the PQ
-      * tier's own cost knob, absent from the coarse walk. */
-    def rerankPerAnchor: Int = rerank
   }
 
   /** The deterministic (probeSupers, nprobe) ladder a recall-targeted

@@ -195,6 +195,58 @@ object VectorAgg {
       .toDF(cellCol, "__newc")
   }
 
+  /** One cell's decimal-parity mean and its member count. */
+  final case class CellMean(mean: Array[Double], n: Long)
+
+  /** [[decimalVecMeans]] as ONE shuffle-free job, for the Lloyd loops
+    * whose centroid matrix is driver state anyway: each partition
+    * reduces its rows into per-cell [[DecBuf]]s, and the driver merges
+    * the partition results as they arrive and finishes each cell —
+    * the [[DecimalVecMeanAggregator]]'s own reduce/merge/finish, so
+    * every mean is bit-identical to the posexplode (cell, d) decimal
+    * aggregate and independent of partitioning (exact 128-bit sums).
+    * A cell with no rows emits no key. The keyed aggregate costs a
+    * shuffle-map job plus a result job per call, and Lloyd loops at
+    * bench scale are bound by that fixed per-job cost.
+    *
+    * Driver cost: each task returns ≤ min(its rows, cells) buffers of
+    * dim 128-bit sums, merged into one cells × dim table — bounded by
+    * `spark.driver.maxResultSize` in total, so it is the shape for the
+    * driver-resident trainers; the relational tier keeps the keyed
+    * aggregate ([[decimalVecMeans]]). */
+  def collectDecimalVecMeans(assigned: DataFrame, cellCol: String = "cell",
+      vecCol: String = "vec"): Map[Int, CellMean] = {
+    val spark = assigned.sparkSession
+    import spark.implicits._
+    val agg = new DecimalVecMeanAggregator
+    type Bufs = scala.collection.mutable.HashMap[Int, DecBuf]
+    val merged = assigned.select(col(cellCol).cast("int"),
+        col(vecCol).cast("array<double>"))
+      .as[(Int, Array[Double])].rdd
+      .aggregate(new Bufs)(
+        (bufs, row) => {
+          bufs(row._1) = agg.reduce(bufs.getOrElse(row._1, agg.zero), row)
+          bufs
+        },
+        (into, part) => {
+          part.foreach { case (cell, b) =>
+            into(cell) = into.get(cell) match {
+              case None => b
+              case Some(a) =>
+                // the reduce-side width check, across partitions
+                require(a.lo.length == b.lo.length,
+                  s"decimalVecMeans: ragged vector set in cell $cell — " +
+                    s"${b.lo.length} vs ${a.lo.length}")
+                agg.merge(a, b)
+            }
+          }
+          into
+        })
+    merged.iterator.map { case (cell, b) =>
+      cell -> CellMean(agg.finish(b), b.n)
+    }.toMap
+  }
+
   /** Pool chunk rows (idCol, vecCol ARRAY<numeric>) → one row per id
     * with mean, max, n_chunks, and L2-normalized mean (the recall
     * vector — Docs/SIMILARITY-PLAN.md:40-42). */

@@ -85,6 +85,31 @@ class IvfPqPortableSpec extends SparkSpec {
     assert(out(0).getDouble(3) > 0.999, "near-dup cosine")
   }
 
+  test("keyed codebook training ≡ m independent trainModel fits on the residual slices, bit for bit") {
+    // residual-like relation: signed, per-subspace-distinct values
+    val (m, dsub, ksub, iters) = (4, 2, 4, 3)
+    val r = new scala.util.Random(17)
+    val res = (0 until 60).map { i =>
+      (i.toLong, Array.tabulate(m * dsub)(d =>
+        (r.nextDouble() - 0.5) * (d + 1) + (i % (d + 2))))
+    }.toDF("id", "rvec").repartition(5)
+    val keyed = graft.operators.IvfPqPortable.trainCodebooks(res, m,
+      ksub, iters, dsub)
+    assert(keyed.length === m)
+    (0 until m).foreach { j =>
+      val solo = graft.operators.KMeansPortable.trainModel(
+        res.select(col("id"), slice(col("rvec"), j * dsub + 1, dsub)
+          .as("svec")), ksub, iters, "id", "svec")
+      assert(keyed(j).centroids.map(_.toSeq).toSeq ===
+        solo.centroids.map(_.toSeq).toSeq, s"subspace $j centroids")
+      assert(keyed(j).counts.toSeq === solo.counts.toSeq,
+        s"subspace $j counts")
+      assert(keyed(j).counts.sum === 60L)
+    }
+    // the fits really are distinct (no key collision across subspaces)
+    assert(keyed.map(_.centroids.map(_.toSeq).toSeq).distinct.length === m)
+  }
+
   test("m must divide dim, loudly") {
     val e = intercept[IllegalArgumentException] {
       IvfPqPortable.topK(corpus, col("id") < 3, k = 2, nlist = 2,

@@ -94,6 +94,28 @@ class KMeansPortableSpec extends SparkSpec {
     assert(m1.counts.toSeq === m2.counts.toSeq)
   }
 
+  test("a ragged corpus fails training loudly, naming the cell") {
+    // per-(cell, d) counts would let a ragged cell's mean diverge
+    // silently (n of whichever dimension came last); the one-job
+    // decimal mean refuses — within one partition (reduce) and across
+    // partitions (the driver merge) alike
+    def ragged(width: Long => Int) = (0L until 40L).map { i =>
+      (i, Array.tabulate(width(i))(d => i * 0.1 + d))
+    }.toDF("vec_id", "embedding")
+    def causes(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.toString).mkString(" <- ")
+    // mixed widths inside every partition; then widths split by id
+    // range over 4 range partitions, so only the merge sees both
+    Seq(ragged(i => 2 + (i % 2).toInt).repartition(1),
+      ragged(i => if (i < 20) 2 else 3).repartitionByRange(4, col("vec_id")))
+      .foreach { df =>
+        val e = intercept[Exception](
+          KMeansPortable.trainModel(df, k = 1, iters = 1))
+        assert(causes(e).contains("ragged vector set in cell 0"), causes(e))
+      }
+  }
+
   test("nlistFor: ceil to the target cell population, floor 1, hard clamp") {
     val t = KMeansPortable.DefaultTargetCellSize
     assert(KMeansPortable.nlistFor(0L) === 1)

@@ -279,27 +279,77 @@ class VectorAggSpec extends SparkSpec {
       }
       (cell, v)
     }
-    Seq(1, 13).foreach { parts =>
-      val df = rows.toDF("cell", "vec").repartition(parts)
-      val fast = VectorAgg.decimalVecMeans(df).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toMap
-      val slow = df
-        .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
-        .groupBy(col("cell"), col("d"))
-        .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
-            .cast("double") / count(lit(1))).as("c"))
-        .groupBy(col("cell"))
-        .agg(array_sort(collect_list(struct(col("d"), col("c"))))
-          .as("ps"))
-        .select(col("cell"),
-          transform(col("ps"), p => p.getField("c")).as("m"))
-        .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-        .toMap
-      assert(fast.keySet === slow.keySet)
-      fast.keySet.foreach { c =>
-        assert(fast(c) === slow(c), s"cell $c at $parts partitions")
+    // the posexplode (cell, d) decimal aggregate, with its per-d
+    // member counts (uniform here — one count per cell)
+    def reference(df: org.apache.spark.sql.DataFrame) = df
+      .select(col("cell"), posexplode(col("vec")).as(Seq("d", "x")))
+      .groupBy(col("cell"), col("d"))
+      .agg((sum(round(col("x"), 12).cast(DecimalType(38, 12)))
+          .cast("double") / count(lit(1))).as("c"),
+        count(lit(1)).as("n"))
+      .groupBy(col("cell"))
+      .agg(array_sort(collect_list(struct(col("d"), col("c"))))
+        .as("ps"), min(col("n")).as("n_lo"), max(col("n")).as("n_hi"))
+      .select(col("cell"),
+        transform(col("ps"), p => p.getField("c")).as("m"),
+        col("n_lo"), col("n_hi"))
+      .collect().map { r =>
+        assert(r.getLong(2) === r.getLong(3), "uniform widths")
+        r.getInt(0) -> (r.getSeq[Double](1).toSeq, r.getLong(2))
+      }.toMap
+    // the one-job update must also BE one job with no shuffle: jobs
+    // and RUN stages (a cached input's skipped lineage stages do not
+    // count) tagged through a thread-local property
+    def jobsAndStages(f: => Unit): (Int, Int) = {
+      val sc = spark.sparkContext
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val stages = new java.util.concurrent.atomic.AtomicInteger()
+      def tagged(p: java.util.Properties) =
+        Option(p).exists(_.getProperty("graft.spec.tag") == "onejob")
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (tagged(e.properties)) jobs.incrementAndGet()
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          if (tagged(e.properties)) stages.incrementAndGet()
       }
+      sc.addSparkListener(l)
+      sc.setLocalProperty("graft.spec.tag", "onejob")
+      try f finally {
+        sc.setLocalProperty("graft.spec.tag", null)
+        org.apache.spark.sql.graft.ListenerDrain.drain(sc)
+        sc.removeSparkListener(l)
+      }
+      (jobs.get, stages.get)
     }
+    val oneJobRuns = for {
+      parts <- Seq(1, 7, 13)
+      shuffle <- Seq("1", "64")
+    } yield withSQLConf("spark.sql.shuffle.partitions" -> shuffle) {
+      val where = s"at $parts partitions, shuffle width $shuffle"
+      val df = rows.toDF("cell", "vec").repartition(parts).cache()
+      try {
+        df.count()
+        val fast = VectorAgg.decimalVecMeans(df).collect()
+          .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toMap
+        val slow = reference(df)
+        var oneJob = Map.empty[Int, VectorAgg.CellMean]
+        assert(jobsAndStages {
+          oneJob = VectorAgg.collectDecimalVecMeans(df)
+        } === ((1, 1)), s"one single-stage job $where")
+        assert(fast.keySet === slow.keySet)
+        assert(oneJob.keySet === slow.keySet)
+        slow.foreach { case (c, (mean, n)) =>
+          assert(fast(c) === mean, s"cell $c $where")
+          assert(oneJob(c).mean.toSeq === mean, s"cell $c mean $where")
+          assert(oneJob(c).n === n, s"cell $c count $where")
+        }
+        oneJob.map { case (c, cm) => c -> ((cm.mean.toSeq, cm.n)) }
+      } finally df.unpersist()
+    }
+    assert(oneJobRuns.distinct.size === 1,
+      "one-job means and counts independent of partitioning")
     // the loud overflow contract: an element past the scaled-long
     // domain throws instead of silently wrapping
     val e = intercept[org.apache.spark.SparkException](
